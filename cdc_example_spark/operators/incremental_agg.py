@@ -51,6 +51,7 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from cdc_example_spark.operators.keyed_state import microbatch_conf
+from cdc_example_spark.session import local_frame
 
 #: keep this many superseded version dirs for post-crash inspection
 _KEEP_VERSIONS = 2
@@ -97,7 +98,7 @@ class IncrementalAggSink:
         """Current aggregate state (empty before the first batch)."""
         v = self.current_version()
         if v is None:
-            return spark.createDataFrame([], AGG_SCHEMA)
+            return local_frame(spark, [], AGG_SCHEMA)
         return spark.read.parquet(self._version_dir(v))
 
     # -- the incremental apply ---------------------------------------------

@@ -38,6 +38,7 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from cdc_example_spark.schemas import MESSAGES
+from cdc_example_spark.session import local_frame
 
 #: shuffle width for the per-batch collapse/merge: micro-batches are
 #: small by construction, so a handful of reducers beats the session's
@@ -337,7 +338,7 @@ class KeyedStateSink:
                 # deleted), or vanished between the check and the read
                 # (the swap completed) — try the other candidate.
                 continue
-        return spark.createDataFrame([], self.schema)
+        return local_frame(spark, [], self.schema)
 
     # ------------------------------------------------------------------
     # the CDC apply (foreachBatch body)
@@ -934,5 +935,5 @@ class KeyedStateSink:
         """Batch twin of MessageService.deleteMessage (MessageService.kt:36-39)."""
         spark = keys.sparkSession
         touched = keys.select(F.col(keys.columns[0]).alias(self.key)).distinct()
-        empty = spark.createDataFrame([], self.schema)
+        empty = local_frame(spark, [], self.schema)
         self._merge(spark, touched, empty)

@@ -20,10 +20,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from cdc_example_spark.functions import vector as V
+from cdc_example_spark.session import local_frame
 
 
 def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
@@ -201,8 +201,8 @@ def train_ivf_centroids(
     C = train_ivf_centroids_local(
         vectors, n_centroids, sample_size, n_iters, id_col, vec_col, seed
     )
-    spark = vectors.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        vectors.sparkSession,
         [(int(j), row) for j, row in enumerate(C)],
         f"{id_col} long, {vec_col} array<double>",
     )
@@ -401,7 +401,8 @@ def ivf_topk_indexed(
     cells — slower than brute force. The switch cannot touch any
     oracle tier (q70 serves at k ≤ ~80) and is the same bounded
     request-side collect the expression path already does; ties break
-    (dot desc, cid asc) identically via stable argsort.
+    (dot desc, cid asc) identically via stable argsort; the request
+    frame it builds is a ``LocalRelation`` (``session.local_frame``).
     """
     if len(centroids) > 256:
         C = np.asarray(centroids, dtype=np.float64)
@@ -419,21 +420,11 @@ def ivf_topk_indexed(
         # (and cosine_topk/ivf_topk) accept any id type, and a
         # hardcoded 'long' would silently narrow this path's contract
         # for string/int ids (ADVICE r6).
-        qry = spark.createDataFrame(
+        id_dt = dict(queries.dtypes)[id_col]
+        qry = local_frame(
+            spark,
             qdf_rows,
-            T.StructType(
-                [
-                    T.StructField(
-                        "query_id", queries.schema[id_col].dataType, True
-                    ),
-                    T.StructField(
-                        "qv", T.ArrayType(T.DoubleType(), True), True
-                    ),
-                    T.StructField(
-                        "probe_cells", T.ArrayType(T.IntegerType(), True), True
-                    ),
-                ]
-            ),
+            f"query_id {id_dt}, qv array<double>, probe_cells array<int>",
         )
     else:
         qry = (
@@ -1010,7 +1001,9 @@ def ivf2_topk_indexed(
     n_probe_coarse·n_probe_fine of k1·k2 directories. Candidates join
     the broadcast queries on their probe pairs and one window yields
     the top-k, cosine-descending with the id tie-break — the exact
-    output contract of cosine_topk/ivf_topk.
+    output contract of cosine_topk/ivf_topk. The request frame carrying
+    the probe pairs is a ``LocalRelation`` (``session.local_frame``):
+    broadcasting it starts no job and no Python worker.
     """
     q_rows = (
         _as_double(queries, vec_col)
@@ -1038,7 +1031,8 @@ def ivf2_topk_indexed(
     # carry the caller's id type: batch-table indexes key by long, but
     # CDC-keyed layouts (ann_freshness) key by the envelope's string id
     id_dt = dict(queries.dtypes)[id_col]
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [
             (qid, qv, [[int(c), int(f)] for c, f in pairs])
             for qid, qv, pairs in per_query

@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from cdc_example_spark.queries.registry import query
 from cdc_example_spark.queries.util import dec2, shuffled_order, small_result_order
+from cdc_example_spark.session import local_frame
 from cdc_example_spark.sources.catalog import load_doc_tokens, load_table
 
 # ---------------------------------------------------------------------------
@@ -897,7 +898,8 @@ def q109(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not tot_rows:
         # empty corpus: the pre-r8 declarative shape returned an empty
         # result; the literal spine must too, not raise (ADVICE r8).
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "source string, n_tokens long, n_top_present long, "
             "top_coverage_pct double, kl_vs_mixture double",
@@ -931,16 +933,12 @@ def q109(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cnt").alias("n_top_tokens"),
         )
     )
-    # |sources| output spine from the collected totals (the q105
-    # winner-row pattern: range(…, numPartitions=1) + lit, never
-    # createDataFrame's pickled-RDD path).
-    spine = None
-    for r in tot_rows:
-        row = spark.range(0, 1, 1, 1).select(
-            F.lit(r["source"]).alias("source"),
-            F.lit(int(r["n_tok"])).cast("long").alias("n_tok"),
-        )
-        spine = row if spine is None else spine.unionAll(row)
+    # |sources| output spine from the collected totals
+    spine = local_frame(
+        spark,
+        [(r["source"], int(r["n_tok"])) for r in tot_rows],
+        "source string, n_tok long",
+    )
     return (
         spine.join(kl.withColumnRenamed("source", "_s2"),
                    F.col("source") == F.col("_s2"), "left")

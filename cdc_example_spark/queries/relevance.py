@@ -21,6 +21,7 @@ from cdc_example_spark.operators import relevance as R
 from cdc_example_spark.operators import sampling as S
 from cdc_example_spark.queries.registry import query
 from cdc_example_spark.queries.util import dec2, shuffled_order, small_result_order
+from cdc_example_spark.session import local_frame
 from cdc_example_spark.sources.catalog import load_doc_tokens, load_table
 
 # ---------------------------------------------------------------------------
@@ -773,27 +774,14 @@ def q105(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # literal winner rows built JVM-side (range(…, numPartitions=1) +
-    # lit), NOT createDataFrame: local python data parallelizes into
-    # defaultParallelism pickled-RDD partitions, and the final
-    # coalesce(1) then chains 32 sequential Python-worker evaluations
-    # into one task (measured +3.2 s on a 2-row frame).
-    mrows = None
-    for stage, item, cnt, rnk in merges:
-        row = spark.range(0, 1, 1, 1).select(
-            F.lit(stage).alias("stage"),
-            F.lit(item).alias("item"),
-            F.lit(cnt).cast("long").alias("cnt"),
-            F.lit(rnk).cast("long").alias("rnk"),
-        )
-        mrows = row if mrows is None else mrows.unionAll(row)
+    mrows = local_frame(spark, merges, "stage string, item string, cnt long, rnk long")
     vrows = vocab.select(
         F.lit("vocab").alias("stage"),
         F.col("token").alias("item"),
         F.col("cnt").cast("long").alias("cnt"),
         F.col("rnk").cast("long").alias("rnk"),
     )
-    out = vrows if mrows is None else mrows.unionAll(vrows)
+    out = mrows.unionAll(vrows)
     return out.transform(small_result_order, "stage", "rnk", "item")
 
 
@@ -1058,18 +1046,12 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("pct"),
     )
-    mrows = None
-    for r, pair, cnt in merges:
-        row = spark.range(0, 1, 1, 1).select(
-            F.lit("merge").alias("stage"),
-            F.lit(r).cast("long").alias("rnk"),
-            F.lit(pair).alias("item"),
-            F.lit(cnt).cast("long").alias("n_a"),
-            F.lit(0).cast("long").alias("n_b"),
-            F.lit(0.0).alias("pct"),
-        )
-        mrows = row if mrows is None else mrows.unionAll(row)
-    out = encode_rows if mrows is None else mrows.unionAll(encode_rows)
+    mrows = local_frame(
+        spark,
+        [("merge", r, pair, cnt, 0, 0.0) for r, pair, cnt in merges],
+        "stage string, rnk long, item string, n_a long, n_b long, pct double",
+    )
+    out = mrows.unionAll(encode_rows)
     return out.transform(small_result_order, "stage", "rnk", "item")
 
 
@@ -1468,18 +1450,12 @@ def q112(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_sub_total").cast("long").alias("n_b"),
         dec2(F.col("n_sub_total") / F.col("n_words")).alias("pct"),
     )
-    mrows = None
-    for r, pair, cnt in merges:
-        row = spark.range(0, 1, 1, 1).select(
-            F.lit("merge").alias("stage"),
-            F.lit(r).cast("long").alias("rnk"),
-            F.lit(pair).alias("item"),
-            F.lit(cnt).cast("long").alias("n_a"),
-            F.lit(0).cast("long").alias("n_b"),
-            F.lit(0.0).alias("pct"),
-        )
-        mrows = row if mrows is None else mrows.unionAll(row)
-    out = encode_rows if mrows is None else mrows.unionAll(encode_rows)
+    mrows = local_frame(
+        spark,
+        [("merge", r, pair, cnt, 0, 0.0) for r, pair, cnt in merges],
+        "stage string, rnk long, item string, n_a long, n_b long, pct double",
+    )
+    out = mrows.unionAll(encode_rows)
     return out.transform(small_result_order, "stage", "rnk", "item")
 
 

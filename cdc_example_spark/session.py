@@ -17,8 +17,10 @@ from __future__ import annotations
 
 import os
 from pathlib import Path
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -135,3 +137,35 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over rows the driver holds, typed by ``schema`` (a
+    DDL string or a ``StructType``). For request- and metadata-sized
+    rows only — a serving request, a centroid table, per-cell counts,
+    an empty typed frame — never corpus data: the rows pass through the
+    driver's memory in one piece.
+
+    The rows go to the JVM as one Arrow table and plan as a
+    ``LocalRelation``, so no action over the frame starts a Spark job or
+    a Python worker. ``spark.createDataFrame(list)`` instead parallelizes
+    the rows into ``defaultParallelism`` pickled-RDD partitions: every
+    action over that frame is a job whose tasks each start a Python
+    worker to unpickle their slice, and a ``coalesce(1)`` downstream
+    chains those evaluations into one task.
+    """
+    # every entry point imports this module; only this helper needs Arrow
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cdc_example_spark.operators.keyed_state import KeyedStateSink, microbatch_conf
+from cdc_example_spark.session import local_frame
 from cdc_example_spark.streaming.envelope import decode_envelope, route_changes
 
 
@@ -190,7 +191,7 @@ def ivf2_apply_cdc(
                 .select("vec_id", "v", "coarse", "fine")
             )
         else:
-            current = spark.createDataFrame([], idx_schema)
+            current = local_frame(spark, [], idx_schema)
         # drop every batch key from the read-back (update/delete purge +
         # idempotent redelivery), then add the surviving new images
         keys = assigned.select(F.col("key_id").alias("vec_id"))

@@ -101,6 +101,7 @@ from cdc_example_spark.operators.similarity import (
     ivf2_topk_indexed,
     train_ivf2_local,
 )
+from cdc_example_spark.session import local_frame
 from cdc_example_spark.streaming.ann_freshness import (
     _record_index_batch_id,
     ivf2_apply_cdc,
@@ -332,20 +333,14 @@ def versioned_layout_health(
     """q116's monitor against a version's OWN training era: current
     occupancy answered from parquet footers (no data column read —
     VERDICT r12 item 3) vs the reference counts persisted at build
-    time, through the same PSI core. Both sides are now cell-bounded
-    LOCAL frames; the per-batch monitor's scan cost is footer reads,
-    full stop."""
+    time, through the same PSI core. Both sides are cell-bounded
+    ``LocalRelation``s (``session.local_frame``); the per-batch
+    monitor's scan cost is footer reads, full stop."""
     n_coarse = len(meta["coarse"])
     n_fine = int(meta["n_fine"])
-    ref = spark.createDataFrame(
-        [(int(c), int(f), int(n)) for c, f, n in meta["ref_counts"]] or
-        [(0, 0, 0)],
-        "coarse int, fine int, n_ref long",
-    )
-    cur = spark.createDataFrame(
-        [(c, f, n) for c, f, n in _cell_counts(spark, vdir)] or
-        [(0, 0, 0)],
-        "coarse int, fine int, n_cur long",
+    ref = local_frame(spark, meta["ref_counts"], "coarse int, fine int, n_ref long")
+    cur = local_frame(
+        spark, _cell_counts(spark, vdir), "coarse int, fine int, n_cur long"
     )
     counts = (
         ref.join(cur, ["coarse", "fine"], "full_outer")

@@ -51,6 +51,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import SparkSession
 
 from cdc_example_spark.operators.keyed_state import KeyedStateSink, KeyNotFoundError
+from cdc_example_spark.session import local_frame
 
 
 def _static_page(name: str) -> str:
@@ -108,15 +109,14 @@ class MessageRestServer:
             raise ValueError("username and message are required strings")
         now = self._clock().replace(tzinfo=None)  # sink stores naive-UTC
         with self._lock:
-            reqs = self._spark.createDataFrame(
-                [(req_id, username, message)], "id STRING, username STRING, message STRING"
-            )
+            reqs = local_frame(self._spark, [(req_id, username, message)],
+                               "id STRING, username STRING, message STRING")
             saved = self._sink.upsert_requests(reqs, now).collect()
         return _row_json(saved[0])
 
     def _delete(self, message_id: str) -> None:
         with self._lock:
-            keys = self._spark.createDataFrame([(message_id,)], "id STRING")
+            keys = local_frame(self._spark, [(message_id,)], "id STRING")
             self._sink.delete_keys(keys)
 
     def _list(self) -> list[dict]:

@@ -15,13 +15,13 @@ from cdc_example_spark.queries import all_queries
 
 def test_compact_contract_line_fits_driver_tail():
     names = sorted(all_queries())
-    # worst-case per-query value: "999.99" (2-decimal rounding in
+    # worst-case per-query value: "9999.99" (2-decimal rounding in
     # bench.py); worst-case totals/cdc fields padded generously.
     compact = {
         "metric": "suite_total_sec",
         "value": 99999.999,
         "unit": "sec",
-        "queries": {n.split("_", 1)[0]: 999.99 for n in names},
+        "queries": {n.split("_", 1)[0]: 9999.99 for n in names},
         "n_queries": len(names),
         "cold_total_sec": 99999.999,
         "construct_total_sec": 99999.999,

@@ -34,7 +34,7 @@ def test_tiny_input_gets_floor_width_no_aqe(tmp_path):
 
 def test_mid_input_width_graduates(tmp_path):
     prof = scale_profile(_dir_with_parquet(tmp_path, 200 * 1024**2))
-    assert prof["spark.sql.shuffle.partitions"] == "25"
+    assert prof["spark.sql.shuffle.partitions"] == str(min(25, DEFAULT_SHUFFLE_PARTITIONS))
 
 
 def test_width_caps_at_core_count(tmp_path):
