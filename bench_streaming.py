@@ -35,7 +35,6 @@ def run(
     n_events: int | None = None,
     n_files: int = 5,
     num_buckets: "int | None" = None,
-    scoped_read: bool = True,
 ) -> dict:
     """Run the CDC apply benchmark; returns the metrics dict.
 
@@ -88,7 +87,6 @@ def run(
     sink = KeyedStateSink(
         path=os.path.join(work, "state"),
         num_buckets=num_buckets,
-        scoped_read=scoped_read,
     )
     batch_times: list[float] = []
     marks: list[float] = [time.perf_counter()]

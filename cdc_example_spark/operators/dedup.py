@@ -93,20 +93,6 @@ def minhash_signature(text: Column, num_hashes: int = 8) -> Column:
     return F.array(*mins)
 
 
-def lsh_band_keys(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """Fold each signature band to one long key → array<struct<band,key>>."""
-    entries = []
-    for b in range(bands):
-        band_slice = F.slice(sig, b * rows_per_band + 1, rows_per_band)
-        key = F.aggregate(
-            band_slice,
-            F.lit(17).cast("long"),
-            lambda acc, x: (acc * 31 + x) % F.lit(MINHASH_P),
-        )
-        entries.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
-    return F.array(*entries)
-
-
 def token_fp_rows(
     df: DataFrame,
     text_col: str = "text",
@@ -183,27 +169,6 @@ def shingle_fp_rows(
         *[F.col(c) for c in extra_cols],
         F.explode(F.array_distinct(shingles)).alias("fp"),
     )
-
-
-def minhash_signature_table(
-    df: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    num_hashes: int = 8,
-    extra_cols: tuple[str, ...] = (),
-    tokens_col: str | None = None,
-) -> DataFrame:
-    """MinHash signature as wide columns s0..s{k-1}, one row per doc.
-
-    Shape for scale: explode → groupBy(key) runs as partial (map-side)
-    min + one shuffle of k longs per doc; nothing quadratic, no Python.
-    """
-    fps = token_fp_rows(df, text_col, key_col, extra_cols, tokens_col)
-    aggs = [
-        F.min((F.lit(a) * F.col("fp") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"s{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    return fps.groupBy(key_col, *extra_cols).agg(*aggs)
 
 
 def lsh_candidate_pairs(

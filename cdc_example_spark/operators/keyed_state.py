@@ -32,7 +32,7 @@ import threading
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
@@ -41,14 +41,11 @@ from cdc_example_spark.schemas import MESSAGES
 from cdc_example_spark.session import local_frame
 
 #: shuffle width for the per-batch collapse/merge: micro-batches are
-#: small by construction, so a handful of reducers beats the session's
-#: table-scale default (A/B at 20k-event batches: 22% off the p50;
-#: r4 re-sweep 4/8/16 → medians 1340/1576/1649 ms standalone — 4 takes
-#: another ~15% off the p50, the per-batch stages are task-launch
-#: bound, not width bound).
-MICROBATCH_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_MICROBATCH_SHUFFLE", "4")
-)
+#: small by construction and the per-batch stages are task-launch
+#: bound, not width bound, so a handful of reducers beats the
+#: session's table-scale default (standalone sweep of 4/8/16 at
+#: 20k-event batches: medians 1340/1576/1649 ms).
+MICROBATCH_SHUFFLE_PARTITIONS = 4
 
 #: Largest bucket-directory count for which the streaming apply takes
 #: the ONE-JOB fused shape (filesystem bucket listing + in-plan
@@ -57,26 +54,20 @@ MICROBATCH_SHUFFLE_PARTITIONS = int(
 #: bucket dir per batch is the table-proportional cost scoped reads
 #: exist to avoid — a 100 TB deployment pins num_buckets in the
 #: thousands and stays on the scoped path.
-FUSED_APPLY_MAX_BUCKETS = int(
-    os.environ.get("SPARK_GRAFT_FUSED_APPLY_MAX_BUCKETS", "64")
-)
+FUSED_APPLY_MAX_BUCKETS = 64
 
 #: Decode split for micro-batch inputs: a batch arrives as ONE source
 #: file, which the default 128 MB split turns into ONE decode task —
-#: single-threaded from_json on a 32-core box. 512 KB parallelizes
-#: the decode (pre-fused A/B: p50 904 → 603 ms with bucket sizing);
-#: re-swept AT the fused shape in r13 — 256 KB/512 KB/1 MB/2 MB
-#: interleaved medians confirmed 512 KB still the floor (SCALE.md
-#: §4b-r13).
-MICROBATCH_DECODE_SPLIT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_MICROBATCH_SPLIT_BYTES", "524288")
-)
+#: single-threaded from_json on a many-core box. 512 KB parallelizes
+#: the decode; an interleaved sweep of 256 KB/512 KB/1 MB/2 MB at the
+#: fused shape puts the floor at 512 KB (SCALE.md §4b-r13).
+MICROBATCH_DECODE_SPLIT_BYTES = 524_288
 
 
 #: serializes SESSION-CONF scopes package-wide: two streaming queries
 #: sharing one session would otherwise interleave set/restore and leak
-#: the scoped profile into each other (reentrant: the REST serving
-#: path may nest through _merge while a scope is held on its thread).
+#: the scoped profile into each other (reentrant, so code already
+#: inside a scope on this thread can open another without deadlocking).
 #: Also held by index_health.parquet_footer_aggregates — any scope that
 #: flips session confs must take THIS lock so snapshots never capture
 #: another scope's flipped values.
@@ -163,13 +154,6 @@ class KeyedStateSink:
     #: count (and must match any persisted count — changing the bucket
     #: count of live state silently mis-addresses every key).
     num_buckets: int | None = None
-    #: VERDICT r5 item 9 (default-tier T3): when True, the per-batch
-    #: state read pins the schema and enumerates ONLY the touched
-    #: bucket directories (``basePath`` + explicit dirs), so untouched
-    #: buckets cost zero metadata work — no root-level partition
-    #: discovery, no parquet footer schema inference, no isin filter.
-    #: False keeps the whole-table-read shape for A/B comparison.
-    scoped_read: bool = True
     #: auto-mode growth threshold: rows per TOUCHED bucket observed on
     #: the merge write (free — rides the existing Observation) above
     #: which the state re-buckets to the next power of two. ~2^18 rows
@@ -192,10 +176,9 @@ class KeyedStateSink:
             )
         self._auto = self.num_buckets is None
         # serializes merges against the auto-resize swap on THIS sink
-        # object (ADVICE r8: _maybe_grow ran outside any lock, so a
-        # concurrent REST _merge could read num_buckets mid-rebucket
-        # and write rows addressed with the old count into the new
-        # layout). Reentrant: _merge → _maybe_grow nests. Two sink
+        # object: a merge that read num_buckets mid-rebucket would
+        # write rows addressed with the old count into the new layout.
+        # Reentrant: apply_changes → _maybe_grow nests. Two sink
         # OBJECTS on one path still race — auto mode is single-writer
         # per process by contract (a 100 TB deployment pins the count).
         self._lock = threading.RLock()
@@ -247,26 +230,16 @@ class KeyedStateSink:
         )
 
     def _read_state(self, spark: SparkSession, buckets: "list[int]") -> DataFrame | None:
-        """State rows of the touched buckets, or None when no state.
+        """State rows of the given buckets, or None when no state.
 
-        Scoped shape: list the touched ``bucket=`` directories on the
-        driver (one existence probe per TOUCHED bucket — untouched
-        buckets are never stat'ed, which is the "metadata-only commit"
-        for them) and read them with a PINNED schema under ``basePath``.
-        vs the whole-table read this skips, per batch: the root listing
-        of all ``num_buckets`` directories, partition-value discovery,
-        and a parquet footer read for schema inference. Legacy shape
-        (``scoped_read=False``): read the root, filter buckets isin.
+        Lists the touched ``bucket=`` directories on the driver (one
+        existence probe per TOUCHED bucket — untouched buckets are never
+        stat'ed, which is the "metadata-only commit" for them) and reads
+        them with a PINNED schema under ``basePath``. A whole-table read
+        would pay, per batch, the root listing of all ``num_buckets``
+        directories, partition-value discovery, and a parquet footer
+        read for schema inference.
         """
-        if not self.scoped_read:
-            if not self.exists():
-                return None
-            try:
-                return spark.read.parquet(self.path).filter(
-                    F.col("bucket").isin(buckets)
-                )
-            except Exception:
-                return None
         dirs = [
             d
             for b in buckets
@@ -485,7 +458,7 @@ class KeyedStateSink:
         with microbatch_conf(spark):
             ch = changes.withColumn("bucket", self._bucket(F.col("key_id")))
             existing = self._existing_buckets()
-            if self.scoped_read and len(existing) <= FUSED_APPLY_MAX_BUCKETS:
+            if len(existing) <= FUSED_APPLY_MAX_BUCKETS:
                 # ADVICE r12: an EMPTY batch must not pay the fused
                 # shape's full state-side plan + dynamic-overwrite
                 # write job. The 1-row probe that gates it is OPT-IN
@@ -525,7 +498,7 @@ class KeyedStateSink:
                     else:
                         allr = cu
                     out = self._winner_rows(allr)
-                    self._overwrite_touched(out, buckets, already_partitioned=True)
+                    self._overwrite_touched(out, buckets)
             if batch_id is not None:
                 self._record_batch_id(batch_id)
         # auto-mode growth check runs OUTSIDE the micro-batch conf scope
@@ -623,71 +596,25 @@ class KeyedStateSink:
         self._overwrite_touched(
             out,
             buckets=None,
-            already_partitioned=True,
             touched_obs=touched_obs,
             touched_fallback=ch.select("bucket").distinct(),
         )
-
-    def _merge(self, spark: SparkSession, touched_keys: DataFrame, new_rows: DataFrame) -> None:
-        """Rewrite only the buckets containing ``touched_keys``."""
-        with self._lock:
-            with microbatch_conf(spark):
-                self._merge_scoped(spark, touched_keys, new_rows)
-            # the write-path operators grow state too (A12/A13): same
-            # auto-mode growth check as the streaming apply
-            self._maybe_grow(spark)
-
-    def _merge_scoped(
-        self,
-        spark: SparkSession,
-        touched_keys: DataFrame,
-        new_rows: DataFrame,
-    ) -> None:
-        """Anti-join MERGE for the write-path operators (A12/A13).
-
-        The streaming hot path uses the fused sort-merge compaction in
-        :meth:`apply_changes`; this REST-serving twin keeps the
-        broadcast anti-join shape because its inputs are request-sized
-        local frames where an extra tiny job is irrelevant and
-        ``touched_keys``/``new_rows`` arrive as separate frames.
-        (Measured r5 negative result, kept for the record: a
-        collect-the-keys LocalRelation variant was ~300 ms WORSE per
-        batch — CollectLimit adds a single-partition exchange and a
-        5k-row py4j collect costs more than the broadcast job it
-        saves.)
-        """
-        key = self.key
-        tk = touched_keys.distinct().withColumn("bucket", self._bucket(F.col(key)))
-        new_rows = new_rows.withColumn("bucket", self._bucket(F.col(key)))
-        # A request touches few keys → the bucket list fits on the
-        # driver by construction (≤ num_buckets entries).
-        buckets = [r[0] for r in tk.select("bucket").distinct().collect()]
-        if not buckets:
-            return
-
-        state = self._read_state(spark, buckets)
-        if state is not None:
-            kept = state.join(
-                F.broadcast(tk.select(key)), on=key, how="left_anti"
-            )
-            out = kept.unionByName(new_rows)
-        else:
-            out = new_rows
-        self._overwrite_touched(out, buckets)
 
     def _overwrite_touched(
         self,
         out: DataFrame,
         buckets: "list[int] | None",
-        already_partitioned: bool = False,
         touched_obs: "Observation | None" = None,
         touched_fallback: "DataFrame | None" = None,
     ) -> None:
         # Overwrite exactly the touched bucket directories in ONE write
         # job via dynamic partition overwrite (a per-bucket write loop is
         # num_buckets Spark jobs per micro-batch — 4× the throughput cost
-        # measured by bench_streaming.py). Reading the state files being
-        # replaced is safe: tasks write to a staging dir and the commit
+        # measured by bench_streaming.py). ``out`` arrives
+        # hash-partitioned by bucket from the winner window's exchange,
+        # so each task writes one file per bucket it holds with no extra
+        # shuffle. Reading the state files being replaced is safe:
+        # tasks write to a staging dir and the commit
         # (directory swap) happens only after the job — i.e. after all
         # reads — complete. Dynamic mode skips a bucket whose keys were
         # ALL deleted (zero output rows), so those stale directories are
@@ -704,12 +631,6 @@ class KeyedStateSink:
             F.collect_set("bucket").alias("nonempty"),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        if not already_partitioned:
-            # the streaming path arrives hash-partitioned by bucket from
-            # its window exchange — re-repartitioning there would add a
-            # shuffle; the REST path needs the clustering for one file
-            # per (task, bucket).
-            observed = observed.repartition(max(len(buckets or []), 1), F.col("bucket"))
         # persist the count the data is about to be hashed with BEFORE
         # the data lands (ADVICE r8 high): a crash between an 8-way
         # first write and a post-write meta would otherwise restart as
@@ -871,6 +792,30 @@ class KeyedStateSink:
     # write-path operators (A12/A13): service-level upsert/delete
     # ------------------------------------------------------------------
 
+    def _request_changes(
+        self, rows: DataFrame, key_col: str, after: "Column | None"
+    ) -> DataFrame:
+        """A REST request as a change frame for :meth:`apply_changes`.
+
+        In the reference a REST write reaches the view only as a change
+        event through the same MERGE as the stream, so requests take
+        the stream's apply here too. ``after`` None marks a delete.
+        ``lsn``/``ts_ms`` are a non-null constant: state rows carry NULL
+        and sort last, so a request row always beats its key's state
+        row, and a key the request repeats collapses to one winner like
+        any in-batch duplicate.
+        """
+        is_delete = after is None
+        if is_delete:
+            after = F.lit(None).cast(self.schema)
+        return rows.select(
+            F.col(key_col).cast(self.schema[self.key].dataType).alias("key_id"),
+            F.lit(is_delete).alias("is_delete"),
+            after.alias("after"),
+            F.lit(0).cast("long").alias("lsn"),
+            F.lit(0).cast("long").alias("ts_ms"),
+        )
+
     def upsert_requests(self, requests: DataFrame, now) -> DataFrame:
         """Batch twin of MessageService.upsertMessage (MessageService.kt:18-34).
 
@@ -918,22 +863,20 @@ class KeyedStateSink:
                 F.col("r.username").alias("username"),
             )
         )
-        # uuid() is NON-deterministic: _merge evaluates new_rows in two
-        # actions (the touched-bucket collect and the overwrite write).
-        # If re-evaluation generated different ids, written rows could
-        # hash into buckets absent from the collected list — and dynamic
-        # partition overwrite would then replace those directories with
-        # ONLY the new rows, silently dropping the live keys that were
-        # never read into `kept`. Materialize the generated ids once so
-        # both actions see identical keys.
+        # uuid() is NON-deterministic, and the apply reads the change
+        # subtree twice in one job: by the bucket semi-join that picks
+        # which state buckets enter the merge, and by the change rows
+        # themselves. Evaluated twice, uuid() would hand the written
+        # rows keys that hash into buckets the semi-join never read —
+        # and dynamic partition overwrite would then replace those
+        # directories with ONLY the new rows, silently dropping their
+        # live keys. Materialize the generated ids once, so every read
+        # and the returned frame see identical keys.
         new_rows = inserts.unionByName(updates).localCheckpoint(eager=True)
-        touched = new_rows.select(F.col("id").alias(self.key)).distinct()
-        self._merge(spark, touched, new_rows)
+        after = F.struct(*self._data_cols())
+        self.apply_changes(self._request_changes(new_rows, "id", after))
         return new_rows
 
     def delete_keys(self, keys: DataFrame) -> None:
         """Batch twin of MessageService.deleteMessage (MessageService.kt:36-39)."""
-        spark = keys.sparkSession
-        touched = keys.select(F.col(keys.columns[0]).alias(self.key)).distinct()
-        empty = local_frame(spark, [], self.schema)
-        self._merge(spark, touched, empty)
+        self.apply_changes(self._request_changes(keys, keys.columns[0], None))

@@ -50,15 +50,6 @@ MEDIA_SCHEMA = StructType(
 
 FEATURE_DIM = 16
 
-FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("features", ArrayType(FloatType())),
-    ]
-)
-
 
 def to_media(df: DataFrame, id_col: str, payload_col: str, media_type: str = "text") -> DataFrame:
     """Wrap any column as an opaque binary media payload with metadata."""

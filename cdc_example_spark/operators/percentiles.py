@@ -1,46 +1,33 @@
-"""Distributed EXACT grouped percentiles: sketch-bracket + refinement.
+"""Distributed EXACT grouped percentiles: bucket brackets + refinement.
 
 The naive exact algorithm materializes every value of every group in
-one place (a per-group sort, or an Arrow transfer into np.percentile —
-``queries/batch.q41``'s original shape). That is fine while groups fit
-a task, but the transfer grows linearly with the fact table: at the
-60 M-row scaling shard the pandas path spends ~20 s moving values.
+one place (a per-group sort, or an Arrow transfer into np.percentile).
+That is fine while groups fit a task, but the transfer grows linearly
+with the fact table: at the 60 M-row scaling shard the pandas path
+spends ~20 s moving values.
 
-This operator computes the same exact linear-interpolation percentiles
-(np.percentile / SQL ``percentile_cont`` semantics) in scan-bound
-distributed passes:
+:func:`grouped_exact_percentiles_bucketed` (q41's operator) computes
+the same exact linear-interpolation percentiles (np.percentile / SQL
+``percentile_cont`` semantics) in scan-bound distributed passes:
 
-1. **Bracket pass** — per group: a Greenwald–Khanna sketch
-   (``percentile_approx``) evaluated at ``q ± margin``. GK's rank error
-   is DETERMINISTIC (≤ n/accuracy), so values at the widened quantiles
-   are guaranteed value-space brackets around the true percentile;
-   ``margin = 4/accuracy`` leaves 4× slack. The sketch is computed
-   EXACTLY ONCE per execution: its only consumers are two identical
-   bracket broadcasts that dedupe into one ReusedExchange.
-2. **Refinement** — two narrow scans, both map-side partial-aggregated:
-   (a) a conditional-sum ``groupBy(group)`` counts strictly-below-
-   bracket values AND non-null values per (column, quantile) pair —
-   ONE output row per group, no row explosion at all (the r4 shape
-   exploded every row into |pairs| structs — 180 M generated rows at
-   the 60 M shard — then collapsed most of them back into NULL-key
-   partials; the conditional sums do the same arithmetic inside one
-   codegen'd agg); (b) a generator emits ONLY in-bracket values
-   (``F.filter`` on the struct array before ``explode``), which GK
-   bounds at ~8·n/accuracy rows per pair — the (value, count)
-   histogram shuffle is tiny by construction. Pass 2a's counts become
-   per-(group, pair) CARRIER rows unioned into the histogram; a
-   same-partition window spreads them onto the value rows (no join)
-   and anchors every group — including all-NULL ones — through the
-   final pivot. A window cumsum then locates the global floor/ceil
-   order statistics and the standard interpolation
+1. **Range pass** — the GLOBAL min/max per column, one row.
+2. **Bucket pass** — one scan counts rows per (group, equi-width
+   bucket) for every column jointly. A cumsum over each group's
+   per-column marginal locates the buckets that hold the floor/ceil
+   order statistics of every requested quantile. The counts are exact,
+   so the located buckets are too; no sketch error budget is involved.
+   Each (column, quantile) pair's bracket is the GLOBAL bucket range
+   over groups, and each group is anchored at its exact count of
+   values below that range.
+3. **Refinement** — one more scan emits only the values inside the
+   bracket range into a (value, count) histogram. A window cumsum on
+   it locates the floor/ceil values and the standard interpolation
    ``v_lo + frac·(v_hi − v_lo)`` finishes on a handful of rows.
 
-No value stream ever leaves the executors, and downstream of the
-bracket broadcast there are NO joins at all — a NULL group key is an
-ordinary grouping value everywhere (closing ADVICE r4's
-non-null-safe-join regression structurally). NULLs are excluded (SQL
-percentile semantics); rank arithmetic uses each column's non-null
-count.
+No value stream ever leaves the executors, and the per-row passes
+carry no hash join — only 1-row broadcasts. A NULL group key is an
+ordinary grouping value everywhere. NULLs are excluded (SQL percentile
+semantics); rank arithmetic uses each column's non-null count.
 """
 
 from __future__ import annotations
@@ -50,219 +37,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def grouped_exact_percentiles(
-    df: DataFrame,
-    group_col: str,
-    specs: "list[tuple[str, list[float]]]",
-    accuracy: int = 10_000,
-    cache_input: bool = False,
-) -> DataFrame:
-    """Exact linear-interpolation percentiles per group.
-
-    ``specs``: ``[(value_col, [q, ...]), ...]``. Returns one row per
-    group with a double column ``{col}_p{int(q*100)}`` per requested
-    quantile (np.percentile semantics, NULLs excluded).
-
-    ``accuracy`` bounds refinement state: each (col, q) pair keeps at
-    most ~8·n/accuracy in-bracket histogram rows.
-
-    Raises ``ValueError`` on a repeated column or quantile — the
-    per-column sketch aliases (``_b_{c}``/``_n_{c}``) and the pair
-    index are keyed by name, so duplicates would silently collide
-    (ADVICE r4); merge the quantile lists per column instead.
-
-    ``cache_input``: persist the (group, values) projection
-    MEMORY_AND_DISK inside the returned plan. Measured NEGATIVE on
-    local[32]/k=100 (13.4 → 21 s warm: a local parquet scan through
-    the OS page cache beats InMemoryRelation's build+decompress for a
-    3-column projection), so q41 leaves it off; the switch exists for
-    cluster deployments reading remote object storage, where a
-    2–4 GB/executor cached slice of a 100 TB table is the standard
-    trade. The pass-1 ``stats`` frame (one row per GROUP) is always
-    persisted instead — without it, every downstream reference
-    re-executes the full GK aggregation and its 60 M-row scan
-    (measured in the physical plan: the sketch ran 3×; persisting it
-    was the k=100 lever, 13.4 → see BASELINE.md r5).
-    """
-    seen: set[str] = set()
-    for c, qs in specs:
-        if c in seen:
-            raise ValueError(
-                f"grouped_exact_percentiles: column {c!r} appears in multiple "
-                "specs entries — merge its quantile lists into one entry"
-            )
-        seen.add(c)
-        if len(qs) != len(set(qs)):
-            raise ValueError(
-                f"grouped_exact_percentiles: duplicate quantiles for column {c!r}"
-            )
-    pairs = [(c, q) for c, qs in specs for q in qs]
-    margin = 4.0 / accuracy
-    g = group_col
-    df = df.select(g, *[c for c, _ in specs])
-    if cache_input:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # ---- pass 1: per-group counts + GK value brackets ----------------
-    # ONE sketch per COLUMN, evaluated at every requested quantile's
-    # widened bounds in a single array call — a per-(col, q) sketch
-    # would rebuild the identical GK structure once per quantile
-    # (measured 18.9 → 14.7 s at the 60 M-row shard for
-    # (price×2, qty×1)). Same sketch + same accuracy ⇒ identical
-    # bracket values.
-    aggs = []
-    bref: dict[int, tuple[str, int]] = {}  # pair t → (column, offset into bounds)
-    for c, qs in specs:
-        bounds = []
-        for q in qs:
-            t = pairs.index((c, q))
-            bref[t] = (c, len(bounds))
-            bounds += [max(0.0, q - margin), min(1.0, q + margin)]
-        aggs.append(
-            F.percentile_approx(
-                F.col(c).cast("double"),
-                F.array(*[F.lit(b) for b in bounds]),
-                accuracy,
-            ).alias(f"_b_{c}")
-        )
-        aggs.append(F.count(F.col(c)).alias(f"_n_{c}"))
-    # Referenced exactly ONCE (the broadcast join below). Spark has no
-    # cross-DAG subtree reuse, so a plan that references ``stats`` k
-    # times re-executes the GK aggregation and its full input scan k
-    # times (the r5-interim shape did exactly that — three separate
-    # ObjectHashAggregate(percentile_approx) subtrees in the physical
-    # plan). Everything downstream that used to re-read ``stats``
-    # (per-pair counts, the all-NULL-group anchor) now rides the
-    # sentinel rows of pass 2 instead, so each execution scans the
-    # input exactly twice with NO persisted intermediates — re-runs
-    # re-execute honestly rather than serving from cache.
-    stats = df.groupBy(g).agg(*aggs)
-
-    # group-cardinality broadcast of the brackets back onto the rows;
-    # null-safe so a NULL-key group's rows still meet their bracket row.
-    st = stats.withColumnRenamed(g, "_g")
-    joined = df.join(F.broadcast(st), F.col(g).eqNullSafe(F.col("_g"))).drop("_g")
-
-    def _bracket(t: int):
-        c = pairs[t][0]
-        _, off = bref[t]
-        v = F.col(c).cast("double")
-        vlo = F.element_at(F.col(f"_b_{c}"), off + 1)
-        vhi = F.element_at(F.col(f"_b_{c}"), off + 2)
-        # Rank-slack proof: GK guarantees |rank − φ·n| ≤ n/accuracy, and
-        # its φ·n rank convention sits ≤ 1 off np.percentile's (n−1)·q.
-        # With margin = 4/accuracy the bracket's slack is 4n/acc −
-        # n/acc − 2 = 3n/acc − 2 ranks, which is ≥ 1 only when
-        # n ≥ accuracy — so SMALL groups (n ≤ accuracy) skip the
-        # bracket and keep their full histogram instead (≤ accuracy
-        # rows, the same state bound the bracket gives big groups).
-        small = F.col(f"_n_{c}") <= accuracy
-        return v, vlo, vhi, small
-
-    # ---- pass 2 (FUSED): one scan, one shuffle ----------------------
-    # Every input row emits (a) a struct per pair it is IN-BRACKET for
-    # (rare by GK's bound: ~8·n/accuracy per pair — F.filter prunes
-    # the array BEFORE the generator runs) and (b) ONE sentinel struct
-    # (t = −1) carrying its below-bracket flags for every pair. The
-    # sentinels all share group key (g, −1, NULL), so the map-side
-    # partial agg collapses them to one row per (group, partition) and
-    # the shuffle stays histogram-sized. This replaces the r5-interim
-    # two-scan split (conditional-sum pass + histogram pass): lt
-    # counts are plain sums, so they can ride ANY row partition — the
-    # sentinel key — and re-aggregate per (g, t) afterwards. One 60 M
-    # scan instead of two at k=100.
-    n_pairs = len(pairs)
-
-    # ---- pass 2a: below-bracket + non-null counts, NO generator ------
-    # Plain conditional sums in one tight codegen'd groupBy(g) — a
-    # sentinel-explode variant that fused 2a into 2b's generator was
-    # measured 2× WORSE at k=100 (the per-row 8-field struct build +
-    # 60 M generated rows through the hash agg cost more than a second
-    # narrow scan; negative result in BASELINE.md r5). The non-null
-    # counts ride here too, so pass 1's ``stats`` is referenced ONLY by
-    # the two identical bracket broadcasts, which dedupe into one
-    # ReusedExchange — the GK aggregation runs exactly once (the
-    # r4 shape re-executed it three times).
-    lt_aggs = []
-    for t, (c, q) in enumerate(pairs):
-        v, vlo, _, small = _bracket(t)
-        lt_aggs.append(
-            F.sum(F.when(v.isNotNull() & ~small & (v < vlo), 1).otherwise(0))
-            .cast("long")
-            .alias(f"lt{t}")
-        )
-    for t, (c, q) in enumerate(pairs):
-        lt_aggs.append(F.count(F.col(c).cast("double")).alias(f"nn{t}"))
-    ltw = joined.groupBy(g).agg(*lt_aggs)
-    # one CARRIER row per (group, pair): joins nothing — it is unioned
-    # into the histogram and its counts are spread onto the value rows
-    # by a window, which also anchors every group (incl. all-NULL ones)
-    # through the final pivot with no re-anchor join.
-    carriers = ltw.select(
-        g,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("t"),
-                        F.lit(None).cast("double").alias("hv"),
-                        F.lit(0).cast("long").alias("cnt"),
-                        F.col(f"lt{t}").alias("n_lt0"),
-                        F.col(f"nn{t}").alias("n0"),
-                    )
-                    for t in range(n_pairs)
-                ]
-            )
-        ).alias("s"),
-    ).select(g, "s.*")
-
-    # ---- pass 2b: in-bracket histogram ONLY -------------------------
-    # F.filter prunes the struct array BEFORE the generator runs, so
-    # explode emits ~8·n/accuracy rows per pair, not one per input row.
-    structs = []
-    for t, (c, q) in enumerate(pairs):
-        v, vlo, vhi, small = _bracket(t)
-        inb = v.isNotNull() & (small | ((v >= vlo) & (v <= vhi)))
-        structs.append(
-            F.when(inb, F.struct(F.lit(t).alias("t"), v.alias("v")))
-        )
-    hist = (
-        joined.select(
-            g,
-            F.explode(
-                F.filter(F.array(*structs), lambda s: s.isNotNull())
-            ).alias("s"),
-        )
-        .groupBy(g, F.col("s.t").alias("t"), F.col("s.v").alias("hv"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            g,
-            "t",
-            "hv",
-            "cnt",
-            F.lit(None).cast("long").alias("n_lt0"),
-            F.lit(None).cast("long").alias("n0"),
-        )
-    )
-
-    return _locate_and_interpolate(carriers, hist, pairs, g, "GK")
-
-
 def _locate_and_interpolate(
-    carriers: DataFrame, hist: DataFrame, pairs, g: str, regime: str
+    carriers: DataFrame, hist: DataFrame, pairs, g: str
 ) -> DataFrame:
-    """Shared tail of both exact-percentile regimes (GK brackets and
-    bucket brackets): locate the floor/ceil order statistics on the tiny
-    in-bracket histogram and linearly interpolate.
+    """Locate the floor/ceil order statistics on the tiny in-bracket
+    histogram and linearly interpolate.
 
     carrier rows (hv NULL, cnt 0) sort first in each (g, t) run and
     contribute nothing to the cumsum; a same-partition window spreads
     their counts onto the value rows — no broadcast join, every frame
     below is histogram-sized, and NULL group keys are ordinary
-    grouping values throughout (no join ⇒ ADVICE r4's non-null-safe
-    join regression is closed structurally).
+    grouping values throughout (no join, so none has to be null-safe).
     """
     allrows = carriers.unionByName(hist)
     wft = Window.partitionBy(g, "t")
@@ -279,18 +64,17 @@ def _locate_and_interpolate(
     has_lo = (first_idx <= F.floor(p)) & (F.floor(p) < end_idx)
     has_hi = (first_idx <= F.ceil(p)) & (F.ceil(p) < end_idx)
     is_carrier = F.col("hv").isNull()
-    # Fail-loud contract (ADVICE r3): the GK rank guarantee makes a
-    # bracket miss impossible by construction — if floor(p)/ceil(p)
-    # still falls outside every in-bracket run, that is a bug (or a
-    # violated sketch contract), and it must surface as an error, not
-    # as a silently-NULL percentile. An all-NULL pair (n = 0) is
-    # exempt — it legitimately has no in-bracket rows and yields SQL
-    # NULL through its carrier row.
+    # Fail-loud contract: exact bucket counts make a bracket miss
+    # impossible by construction — if floor(p)/ceil(p) still falls
+    # outside every in-bracket run, that is a bug, and it must surface
+    # as an error, not as a silently-NULL percentile. An all-NULL pair
+    # (n = 0) is exempt — it legitimately has no in-bracket rows and
+    # yields SQL NULL through its carrier row.
     bracket_ok = F.assert_true(
         (F.col("n") == 0)
         | (F.col("lo").isNotNull() & F.col("hi").isNotNull()),
         F.lit(
-            f"grouped_exact_percentiles: {regime} bracket miss — floor/ceil "
+            "grouped_exact_percentiles_bucketed: bracket miss — floor/ceil "
             "rank outside every in-bracket histogram run"
         ),
     )
@@ -318,12 +102,10 @@ def _locate_and_interpolate(
     ]
     # No re-anchor join needed: every group — including ones whose
     # value columns are entirely NULL — reaches this pivot via its
-    # sentinel (t = −1) row, whose ``val`` is NULL and which matches no
-    # out_agg, so SQL semantics (group row kept, NULL percentiles for
-    # missing pairs) hold with the group list coming from the same
-    # single chain. NULL group keys are ordinary grouping values here
-    # (no join anywhere downstream of the bracket broadcast), closing
-    # ADVICE r4's non-null-safe-join regression structurally.
+    # carrier rows, whose ``val`` is NULL for a pair without values,
+    # so SQL semantics (group row kept, NULL percentiles for missing
+    # pairs) hold with the group list coming from the same single
+    # chain.
     return per.groupBy(g).agg(*out_aggs)
 
 
@@ -334,19 +116,22 @@ def grouped_exact_percentiles_bucketed(
     n_buckets: int = 2048,
     pin_marginal: bool = False,
 ) -> DataFrame:
-    """Exact grouped percentiles via EXACT equi-width bucket brackets —
-    the r7 registered tier (VERDICT r6 item 5's "one more lever").
+    """Exact grouped percentiles via EXACT equi-width bucket brackets.
 
-    Same contract and output schema as :func:`grouped_exact_percentiles`
-    (np.percentile linear interpolation, NULLs excluded, all-NULL
-    groups kept). Two measured facts drive the shape (k=100 shard,
-    2026-08-15):
+    ``specs``: ``[(value_col, [q, ...]), ...]``. Returns one row per
+    group with a double column ``{col}_p{int(q*100)}`` per requested
+    quantile (np.percentile linear interpolation, NULLs excluded,
+    all-NULL groups kept with NULL percentiles). Raises ``ValueError``
+    on a repeated column or quantile — the per-pair aliases are keyed
+    by name, so duplicates would silently collide; merge the quantile
+    lists per column instead.
 
-    * the GK sketch pass is an ObjectHashAggregate paying per-row
-      insert cost — 2.9–7.0 s warm vs ~1 s for a plain bucket-count
-      aggregation;
-    * ANY row-level broadcast hash join costs ~4–5 s at 60 M rows on
-      this host — the GK tier pays it twice (classify + histogram), so
+    Two measured facts drive the shape (k=100 shard, 60 M rows):
+
+    * a sketch bracket pass (``percentile_approx``'s GK sketch) is an
+      ObjectHashAggregate paying per-row insert cost — 2.9–7.0 s warm
+      vs ~1 s for a plain bucket-count aggregation;
+    * ANY row-level broadcast hash join costs ~4–5 s at 60 M rows, so
       a bracket design only wins if the per-row passes carry NO join.
 
     Hence: bucket boundaries use the GLOBAL per-column min/max (ONE
@@ -363,14 +148,12 @@ def grouped_exact_percentiles_bucketed(
     State bound: the histogram carries each group's rows inside the
     pairwise-widest bracket range, ~2n/B per (col, q) pair for
     roughly-uniform value mass and same-magnitude groups. That bound
-    is distributional, not adversarial (GK's is): pathological mass
+    is distributional, not adversarial: pathological mass
     concentration inside one global bucket width — or one group
     occupying a sliver of another group's range — degrades the
     histogram toward O(n) rows (exactness holds regardless; duplicate
-    values still collapse in the (g, t, value) agg). GK's
-    rank-guaranteed bracket remains available as
-    :func:`grouped_exact_percentiles` for those distributions;
-    TPC-H-shaped measures are the uniform case.
+    values still collapse in the (g, t, value) agg). TPC-H-shaped
+    measures are the uniform case.
     """
     seen: set[str] = set()
     for c, qs in specs:
@@ -595,198 +378,4 @@ def grouped_exact_percentiles_bucketed(
         )
     )
 
-    return _locate_and_interpolate(carriers, hist, pairs, g, "bucket")
-
-
-# ---------------------------------------------------------------------------
-# Executable tier choice (VERDICT r7 item 7): the bucket tier's state
-# bound is DISTRIBUTIONAL (~2n/B per pair for roughly-uniform mass)
-# while the GK tier's is adversarial — the selection between them used
-# to be prose. These helpers make it executable: one bounded estimator
-# job measures, for the exact bucket geometry the bucket tier would
-# use, how many rows its pass-3 histogram would carry, and the auto
-# wrapper dispatches on that measurement. The expressions below
-# intentionally REPLAY grouped_exact_percentiles_bucketed's geometry
-# (same _bucket clamp, same marginal, same bracket ranges) so the
-# registered q41 tier stays byte-identical; the replay is pinned
-# against it by tests/test_percentiles.py.
-# ---------------------------------------------------------------------------
-
-
-def bucket_tier_occupancy(
-    df: DataFrame,
-    group_col: str,
-    specs: "list[tuple[str, list[float]]]",
-    n_buckets: int = 2048,
-) -> "tuple[int, int]":
-    """(histogram_rows, scanned_rows) the bucket tier would pay.
-
-    ``histogram_rows``: total rows, summed over (col, q) pairs, that
-    fall inside the pairwise GLOBAL bracket-bucket range — exactly the
-    rows grouped_exact_percentiles_bucketed's pass 3 emits into its
-    per-value histogram. ``scanned_rows``: total non-null rows per
-    pair (the denominator the ~2n/B bound is stated against). ONE
-    Spark action; its plan executes the bucket-count scan twice (once
-    under the bracket-range agg, once under the occupancy sum — no
-    cross-DAG subtree reuse), which is the estimator's honest cost and
-    why the hot q41 path registers the bucket tier directly for
-    TPC-H-shaped measures instead of paying the guard per run.
-    """
-    pairs = [(c, q) for c, qs in specs for q in qs]
-    cols = [c for c, _ in specs]
-    B = int(n_buckets)
-    g = group_col
-    df = df.select(g, *cols)
-    gstats = df.agg(
-        *[
-            a
-            for c in cols
-            for a in (
-                F.min(F.col(c).cast("double")).alias(f"_lo_{c}"),
-                F.max(F.col(c).cast("double")).alias(f"_hi_{c}"),
-            )
-        ]
-    )
-
-    def _bucket(c):
-        v = F.col(c).cast("double")
-        lo, hi = F.col(f"_lo_{c}"), F.col(f"_hi_{c}")
-        raw = F.floor((v - lo) * F.lit(float(B)) / (hi - lo))
-        clamped = F.least(F.greatest(raw, F.lit(0)), F.lit(B - 1))
-        return (
-            F.when(v.isNotNull() & (hi > lo), clamped)
-            .when(v.isNotNull(), F.lit(0))
-            .cast("long")
-        )
-
-    joint = (
-        df.crossJoin(F.broadcast(gstats))
-        .groupBy(g, *[_bucket(c).alias(f"_bk_{j}") for j, c in enumerate(cols)])
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-    )
-    marg = (
-        joint.select(
-            g,
-            "_cnt",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("ci"), F.col(f"_bk_{j}").alias("b")
-                        )
-                        for j in range(len(cols))
-                    ]
-                )
-            ).alias("s"),
-        )
-        .select(g, F.col("s.ci").alias("ci"), F.col("s.b").alias("b"), "_cnt")
-        .groupBy(g, "ci", "b")
-        .agg(F.sum("_cnt").alias("cnt"))
-    )
-    cntn = F.when(F.col("b").isNotNull(), F.col("cnt")).otherwise(F.lit(0))
-    wn = Window.partitionBy(g, "ci")
-    wcum = Window.partitionBy(g, "ci").orderBy("b")
-    mc = (
-        marg.withColumn("C", F.sum(cntn).over(wcum))
-        .withColumn("n", F.sum(cntn).over(wn))
-        .withColumn("cntn", cntn)
-    )
-
-    def _pair_preds(t):
-        c, q = pairs[t]
-        j = cols.index(c)
-        p = (F.col("n") - 1).cast("double") * F.lit(float(q))
-        run_lo = F.col("C") - F.col("cntn")
-        m = (F.col("ci") == j) & F.col("b").isNotNull() & (F.col("n") > 0)
-        m_lo = m & (run_lo <= F.floor(p)) & (F.floor(p) < F.col("C"))
-        m_hi = m & (run_lo <= F.ceil(p)) & (F.ceil(p) < F.col("C"))
-        return m_lo, m_hi
-
-    grange = (
-        mc.groupBy(g)
-        .agg(
-            *[
-                a
-                for t in range(len(pairs))
-                for a in (
-                    F.max(F.when(_pair_preds(t)[0], F.col("b"))).alias(f"_blo_{t}"),
-                    F.max(F.when(_pair_preds(t)[1], F.col("b"))).alias(f"_bhi_{t}"),
-                )
-            ]
-        )
-        .agg(
-            *[
-                a
-                for t in range(len(pairs))
-                for a in (
-                    F.min(F.col(f"_blo_{t}")).alias(f"_gmin_{t}"),
-                    F.max(F.col(f"_bhi_{t}")).alias(f"_gmax_{t}"),
-                )
-            ]
-        )
-    )
-
-    est = mc.crossJoin(F.broadcast(grange))
-    aggs = []
-    for t, (c, _q) in enumerate(pairs):
-        j = cols.index(c)
-        inr = (
-            (F.col("ci") == j)
-            & F.col("b").isNotNull()
-            & (F.col("b") >= F.col(f"_gmin_{t}"))
-            & (F.col("b") <= F.col(f"_gmax_{t}"))
-        )
-        aggs.append(
-            F.coalesce(F.sum(F.when(inr, F.col("cnt"))), F.lit(0))
-            .cast("long")
-            .alias(f"_h_{t}")
-        )
-        aggs.append(
-            F.coalesce(F.sum(F.when(F.col("ci") == j, F.col("cntn"))), F.lit(0))
-            .cast("long")
-            .alias(f"_n_{t}")
-        )
-    r = est.agg(*aggs).first()
-    hist_rows = sum(int(r[f"_h_{t}"]) for t in range(len(pairs)))
-    n_rows = sum(int(r[f"_n_{t}"]) for t in range(len(pairs)))
-    return hist_rows, n_rows
-
-
-def choose_percentile_tier(
-    df: DataFrame,
-    group_col: str,
-    specs: "list[tuple[str, list[float]]]",
-    n_buckets: int = 2048,
-    max_hist_frac: float = 0.05,
-) -> str:
-    """'bucket' when the measured histogram stays within budget
-    (``max_hist_frac`` of the scanned rows — the distributional ~2n/B
-    bound holding in practice), else 'gk' (the rank-guaranteed,
-    adversarial-safe tier)."""
-    hist_rows, n_rows = bucket_tier_occupancy(df, group_col, specs, n_buckets)
-    if n_rows == 0 or hist_rows <= max_hist_frac * n_rows:
-        return "bucket"
-    return "gk"
-
-
-def grouped_exact_percentiles_auto(
-    df: DataFrame,
-    group_col: str,
-    specs: "list[tuple[str, list[float]]]",
-    n_buckets: int = 2048,
-    accuracy: int = 10_000,
-    max_hist_frac: float = 0.05,
-) -> DataFrame:
-    """Measured tier dispatch: run the occupancy estimator, then the
-    tier it selects. Both tiers share the output contract, so the
-    result is np.percentile-identical either way — the guard only
-    decides COST (a mass-concentrated distribution that would degrade
-    the bucket histogram toward O(n) rows routes to GK's
-    rank-guaranteed brackets). q41 registers the bucket tier directly
-    — TPC-H measures are the guaranteed-uniform case and the estimator
-    costs one extra two-scan job per run; deployments on unknown
-    distributions register THIS wrapper."""
-    tier = choose_percentile_tier(df, group_col, specs, n_buckets, max_hist_frac)
-    if tier == "bucket":
-        return grouped_exact_percentiles_bucketed(df, group_col, specs, n_buckets)
-    return grouped_exact_percentiles(df, group_col, specs, accuracy)
+    return _locate_and_interpolate(carriers, hist, pairs, g)

@@ -19,10 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cdc_example_spark.operators.percentiles import (
-    grouped_exact_percentiles,  # noqa: F401 - GK tier, kept available
-    grouped_exact_percentiles_bucketed,
-)
+from cdc_example_spark.operators.percentiles import grouped_exact_percentiles_bucketed
 from cdc_example_spark.queries.registry import query
 from cdc_example_spark.queries.util import day_str, dec2, hour_str, shuffled_order, small_result_order
 from cdc_example_spark.sources.catalog import load_table
@@ -1114,21 +1111,19 @@ def q40(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Q41 — exact percentiles (median / p95, linear interpolation).
-# Registered tier (r4, VERDICT r3 item 2): the DISTRIBUTED-exact path
-# (operators/percentiles.grouped_exact_percentiles — GK-bracket + one
-# classify scan + histogram refinement). No group's value stream ever
-# leaves the executors, so the same plan survives groups beyond task
-# memory — the 100 TB-correct shape for exact percentiles. Linear
-# interpolation matches DuckDB's quantile_cont exactly, so the
-# 2-decimal rounded values hash-match.
-# Tier history, all measured at sf0.1/60 M-shard: Spark's JVM
-# `percentile` aggregate 1.19 s (value→count OpenHashMap per group);
-# Arrow + np.percentile applyInPandas 0.55 s but ships every group's
-# values through Arrow (~20 s at the 60 M-row scaling shard — fast
-# small, wrong shape big; kept as the small-data tier and pinned
-# np-identical to this path in tests/test_percentiles.py);
-# approx_percentile (t-digest, fixed memory, mergeable) is the
-# cheap-sketch tier, asserted within ±1% of exact in tests.
+# The plan is the distributed-exact operator
+# (operators/percentiles.grouped_exact_percentiles_bucketed: exact
+# equi-width bucket brackets + in-bracket histogram refinement). No
+# group's value stream leaves the executors, so the same plan survives
+# groups beyond task memory — the 100 TB-correct shape for exact
+# percentiles. Linear interpolation matches DuckDB's quantile_cont
+# exactly, so the 2-decimal rounded values hash-match.
+# The alternatives cost more at sf0.1 or scale worse: Spark's JVM
+# `percentile` aggregate keeps a value→count OpenHashMap per group
+# (1.19 s); Arrow + np.percentile in applyInPandas ships every group's
+# values through Arrow (0.55 s at sf0.1, ~20 s at the 60 M-row scaling
+# shard). approx_percentile is the cheap-sketch tier, asserted within
+# ±1% of exact in tests.
 # ---------------------------------------------------------------------------
 
 _Q41_ORACLE = """
@@ -1142,42 +1137,24 @@ ORDER BY l_returnflag
 """
 
 
-def _q41_percentiles_pdf(pdf):
-    import numpy as np
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "l_returnflag": [pdf["l_returnflag"].iloc[0]],
-            "median_price": [np.percentile(pdf["l_extendedprice"], 50)],
-            "p95_price": [np.percentile(pdf["l_extendedprice"], 95)],
-            "median_qty": [np.percentile(pdf["l_quantity"], 50)],
-        }
-    )
-
-
 @query("q41_percentiles", oracle=_Q41_ORACLE)
 def q41(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact grouped percentiles (median, p95), distributed two-pass.
+    """Exact grouped percentiles (median, p95), distributed.
 
-    No applyInPandas / full-value transfer anywhere in this plan: pass 1
-    brackets each quantile with a GK sketch, pass 2 classifies values in
-    one scan and refines on a tiny in-bracket histogram (see
-    operators/percentiles.py). The Arrow tier (``_q41_percentiles_pdf``)
-    stays registered for tests, which pin both tiers np-identical.
+    No applyInPandas / full-value transfer anywhere in this plan: exact
+    bucket counts bracket each quantile, and one more scan refines on a
+    tiny in-bracket histogram (see operators/percentiles.py).
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # r7 registered tier: EXACT bucket brackets (VERDICT r6 item 5).
-    # The GK sketch was the measured bottleneck — an ObjectHashAggregate
-    # paying per-row insert cost (2.9–7.0 s warm at the 60 M shard vs
-    # 1.3 s for the min/max + bucket-count passes that replace it), and
-    # its dedicated below-bracket counting scan disappears because the
-    # bucket cumsum IS the exact below count. Exactness is pinned
-    # against np.percentile for both regimes incl. an adversarial-
-    # distribution property test (tests/test_percentiles.py); the GK
-    # tier (grouped_exact_percentiles, accuracy=2048 — A/B history in
-    # BASELINE.md r5) stays available for adversarial value
-    # distributions where the equi-width histogram state bound degrades.
+    # Exact bucket brackets, not a sketch: the min/max and
+    # bucket-count passes take 1.3 s warm at the 60 M shard, where a
+    # GK sketch's ObjectHashAggregate pays a per-row insert cost
+    # (2.9–7.0 s), and the bucket cumsum IS the exact below-bracket
+    # count, so no separate counting scan runs. TPC-H measures are
+    # near-uniform, the case in which the bucket histogram stays tiny;
+    # exactness does not depend on the distribution (pinned against
+    # np.percentile, adversarial distributions included, in
+    # tests/test_percentiles.py).
     per = grouped_exact_percentiles_bucketed(
         li.select("l_returnflag", "l_extendedprice", "l_quantity"),
         "l_returnflag",

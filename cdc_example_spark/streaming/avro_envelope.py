@@ -286,9 +286,6 @@ def _flat_schema_for(row_schema: tuple) -> str:
     )
 
 
-_FLAT_SCHEMA = _flat_schema_for(ROW_SCHEMA)
-
-
 def _decoder_for(
     registry_url: "str | None",
     row_schema: tuple = ROW_SCHEMA,

@@ -32,10 +32,6 @@ from pyspark.sql.types import (
 
 from cdc_example_spark.schemas import CDC_ENVELOPE, CDC_KEY, MESSAGES, _SOURCE
 
-#: Timestamps inside before/after arrive as ISO-8601 instants
-#: (reference prototype/message.md:17,22 — Debezium ZonedTimestamp).
-_TS_FIELDS = ("create_time", "update_time")
-
 
 def wire_image_schema(table_schema: StructType) -> StructType:
     """The row image as Debezium puts it on the wire: every

@@ -1,4 +1,4 @@
-"""Outbound sinks: the reference's serialize + fan-out path (A9/A10/A16).
+"""Outbound sinks: the reference's serialize + fan-out path (A9/A10).
 
 ``ws_frames`` reproduces the WsEvent wire format
 (MessageWebSocketHandler.kt:68-77): ``{type: UPSERT|DELETE, id,
@@ -7,7 +7,8 @@ reproduces serialize-once / per-subscriber error isolation
 (MessageWebSocketHandler.kt:56-66). Subscribers are plain
 ``str -> None`` callables; a real socket endpoint ships in
 ``streaming/websocket.py`` (stdlib RFC 6455 server) — its
-``WsHub.broadcast`` plugs in here directly.
+``WsHub.broadcast`` plugs in here directly. The raw-frame debug tap
+(A16) is the browser page ``streaming/static/debug.html``.
 """
 
 from __future__ import annotations
@@ -57,13 +58,3 @@ def broadcast_frames(
             except Exception as exc:  # one dead subscriber must not stop fan-out
                 errors.append(exc)
     return errors
-
-
-def console_tap(routed: DataFrame, num_rows: int = 20):
-    """Debug tap (A16, debug.html analog): raw frames to the console."""
-    return (
-        ws_frames(routed)
-        .writeStream.format("console")
-        .option("truncate", "false")
-        .option("numRows", str(num_rows))
-    )

@@ -42,22 +42,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    duration: str = "1 hour",
-    slide: str = "30 minutes",
-    ts_col: str = "ts",
-    keys: tuple[str, ...] = ("event_type",),
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Sliding-window aggregation (each event lands in duration/slide windows)."""
-    ev = with_watermark(events, ts_col, watermark)
-    return ev.groupBy(F.window(ts_col, duration, slide).alias("w"), *keys).agg(
-        F.count(F.lit(1)).alias("num_events"),
-        dec2(F.sum("value")).alias("sum_value"),
-    )
-
-
 def session_aggregates(
     events: DataFrame,
     gap: str = "30 minutes",

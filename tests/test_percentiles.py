@@ -1,12 +1,9 @@
 """Distributed exact percentiles (operators/percentiles).
 
-The operator must reproduce np.percentile's linear interpolation
-EXACTLY — it is the beyond-task-memory twin of q41's Arrow+np path
-(which requires each group's full value stream to fit one task). Both
-the bracket regime (n > accuracy) and the small-group full-histogram
-regime (n ≤ accuracy) are exercised, plus the GK-vs-np rank-convention
-shift that motivated the small-group rule (a ±1-rank skew at the
-bracket edge).
+The bucket-bracket operator q41 runs must reproduce np.percentile's
+linear interpolation EXACTLY, for every group size and value
+distribution. Each case runs at two bucket geometries: a narrow one
+(multi-bucket brackets and clamped edges) and the registered width.
 """
 
 from __future__ import annotations
@@ -14,23 +11,18 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from cdc_example_spark.operators.percentiles import (
-    grouped_exact_percentiles,
-    grouped_exact_percentiles_bucketed,
-)
+from cdc_example_spark.operators.percentiles import grouped_exact_percentiles_bucketed
 
 
-def _check(spark, rows, specs, accuracy):
-    """Both exact regimes — GK brackets and bucket brackets (the r7
-    registered tier) — must reproduce np.percentile bit-for-bit on the
-    same inputs."""
+def _check(spark, rows, specs):
+    """Both bucket geometries must reproduce np.percentile bit-for-bit
+    on the same inputs."""
     df = spark.createDataFrame(rows, "g string, x double, y double")
     by_g: dict[str, tuple[list, list]] = {}
     for g, x, y in rows:
         by_g.setdefault(g, ([], []))[0].append(x)
         by_g.setdefault(g, ([], []))[1].append(y)
     for regime, out_df in (
-        ("gk", grouped_exact_percentiles(df, "g", specs, accuracy=accuracy)),
         # small n_buckets on purpose: multi-bucket brackets and clamped
         # edges must exercise, not hide behind a wide B
         ("bucket", grouped_exact_percentiles_bucketed(df, "g", specs, n_buckets=64)),
@@ -52,35 +44,31 @@ def _check(spark, rows, specs, accuracy):
 def test_exactness_both_regimes_and_duplicates(spark):
     rng = np.random.default_rng(7)
     rows = []
-    # group sizes straddle the accuracy=1000 regime boundary; y is a
+    # group sizes from a hundred to tens of thousands; y is a
     # heavy-duplication column (9 distinct values)
     for g, n in (("small", 137), ("mid", 999), ("big", 5000), ("huge", 20000)):
         xs = rng.normal(100, 25, n)
         ys = rng.integers(1, 10, n).astype(float)
         rows += [(g, float(x), float(y)) for x, y in zip(xs, ys)]
-    _check(spark, rows, [("x", [0.5, 0.95]), ("y", [0.5])], accuracy=1000)
+    _check(spark, rows, [("x", [0.5, 0.95]), ("y", [0.5])])
 
 
 def test_rank_convention_edge(spark):
-    # n=1205 / q=0.95 reproduced a real miss during development: GK's
-    # φ·n rank convention sits one rank above np.percentile's (n−1)·q,
-    # outside a naive margin. With n ≤ accuracy the group takes the
-    # full-histogram path and must still be exact.
+    # n=1205 / q=0.95: the (n−1)·q rank convention puts p95 between two
+    # order statistics; a φ·n convention would sit one rank above it.
     rng = np.random.default_rng(11)
     xs = rng.normal(0, 1, 1205)
     rows = [("b", float(x), 0.0) for x in xs]
-    _check(spark, rows, [("x", [0.5, 0.95])], accuracy=10_000)
+    _check(spark, rows, [("x", [0.5, 0.95])])
 
 
 def test_single_row_and_constant_groups(spark):
     rows = [("s", 5.0, 0.0)] + [("c", 1.0, 0.0)] * 3
-    _check(spark, rows, [("x", [0.5, 0.95])], accuracy=100)
+    _check(spark, rows, [("x", [0.5, 0.95])])
 
 
-@pytest.fixture(params=["gk", "bucket"])
+@pytest.fixture(params=["bucket"])  # the test id names the tier under test
 def op(request):
-    if request.param == "gk":
-        return lambda df, g, specs: grouped_exact_percentiles(df, g, specs, accuracy=100)
     return lambda df, g, specs: grouped_exact_percentiles_bucketed(df, g, specs, n_buckets=64)
 
 
@@ -119,11 +107,11 @@ def test_duplicate_specs_raise(spark):
     # and pairs.index() maps duplicate (c, q) to the first occurrence —
     # fail loudly instead of producing an AnalysisException downstream.
     df = spark.createDataFrame([("a", 1.0, 0.0)], "g string, x double, y double")
-    for fn in (grouped_exact_percentiles, grouped_exact_percentiles_bucketed):
-        with pytest.raises(ValueError, match="multiple specs entries"):
-            fn(df, "g", [("x", [0.5]), ("x", [0.9])])
-        with pytest.raises(ValueError, match="duplicate quantiles"):
-            fn(df, "g", [("x", [0.5, 0.5])])
+    fn = grouped_exact_percentiles_bucketed
+    with pytest.raises(ValueError, match="multiple specs entries"):
+        fn(df, "g", [("x", [0.5]), ("x", [0.9])])
+    with pytest.raises(ValueError, match="duplicate quantiles"):
+        fn(df, "g", [("x", [0.5, 0.5])])
 
 
 def test_mixed_null_column_with_values_elsewhere(spark, op):
@@ -180,65 +168,3 @@ def test_bucket_regime_exact_on_adversarial_distributions(spark, groups, q):
     for i, vs in enumerate(groups):
         expect = float(np.percentile(vs, q * 100))
         assert out[f"g{i}"] == pytest.approx(expect, abs=1e-9), (i, q)
-
-
-# ---------------------------------------------------------------------------
-# Executable tier choice (VERDICT r7 item 7): the guard must MEASURE
-# the bucket tier's histogram occupancy and route mass-concentrated
-# distributions to GK, uniform ones to the bucket tier — and the auto
-# wrapper must stay np.percentile-exact on both.
-# ---------------------------------------------------------------------------
-
-
-def test_tier_guard_routes_by_measured_occupancy(spark):
-    from cdc_example_spark.operators.percentiles import (
-        bucket_tier_occupancy,
-        choose_percentile_tier,
-        grouped_exact_percentiles_auto,
-    )
-
-    rng = np.random.default_rng(23)
-    # uniform mass: bracket buckets carry ~n/B rows → bucket tier
-    uni_rows = [("a", float(x), 0.0) for x in rng.uniform(0, 1000, 8000)]
-    # adversarial mass: 99% of values identical at 0 with a 1e9 outlier
-    # tail — the median's bracket bucket holds ~99% of all rows, the
-    # documented bucket-tier degeneracy
-    adv_rows = (
-        [("a", 0.0, 0.0)] * 7920
-        + [("a", float(x), 0.0) for x in rng.uniform(1e8, 1e9, 80)]
-    )
-    specs = [("x", [0.5, 0.95])]
-
-    uni = spark.createDataFrame(uni_rows, "g string, x double, y double")
-    adv = spark.createDataFrame(adv_rows, "g string, x double, y double")
-
-    h_u, n_u = bucket_tier_occupancy(uni, "g", specs)
-    h_a, n_a = bucket_tier_occupancy(adv, "g", specs)
-    assert n_u == 16000 and n_a == 16000  # 2 pairs × 8000 non-null rows
-    assert h_u <= 0.05 * n_u, (h_u, n_u)
-    assert h_a > 0.4 * n_a, (h_a, n_a)
-    assert choose_percentile_tier(uni, "g", specs) == "bucket"
-    assert choose_percentile_tier(adv, "g", specs) == "gk"
-
-    # the dispatch changes COST only, never the value
-    for rows, df in ((uni_rows, uni), (adv_rows, adv)):
-        out = grouped_exact_percentiles_auto(df, "g", specs).collect()[0]
-        vals = [x for _, x, _ in rows]
-        for q in (0.5, 0.95):
-            expect = float(np.percentile(vals, q * 100))
-            assert out[f"x_p{int(q * 100)}"] == pytest.approx(expect, abs=1e-6)
-
-
-def test_tier_guard_occupancy_matches_registered_geometry(spark):
-    """The estimator replays grouped_exact_percentiles_bucketed's exact
-    bucket geometry: on a distribution where the bracket range spans
-    the whole table (2 rows, B buckets), occupancy must be total."""
-    from cdc_example_spark.operators.percentiles import bucket_tier_occupancy
-
-    df = spark.createDataFrame(
-        [("a", 0.0, 0.0), ("a", 1.0, 0.0)], "g string, x double, y double"
-    )
-    h, n = bucket_tier_occupancy(df, "g", [("x", [0.5])], n_buckets=64)
-    # median of 2 rows interpolates between bucket 0 and bucket 63:
-    # the global range covers both rows
-    assert (h, n) == (2, 2)

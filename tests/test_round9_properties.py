@@ -189,19 +189,21 @@ def test_resize_serializes_against_concurrent_merge(spark, tmp_path, monkeypatch
         order.append("rebucket_done")
 
     monkeypatch.setattr(KeyedStateSink, "_rebucket", held_rebucket)
-    real_merge_scoped = KeyedStateSink._merge_scoped
-
-    def traced_merge_scoped(self, *a, **kw):
-        order.append("merge_start")
-        return real_merge_scoped(self, *a, **kw)
-
-    monkeypatch.setattr(KeyedStateSink, "_merge_scoped", traced_merge_scoped)
 
     grower = threading.Thread(
         target=lambda: sink.apply_changes(_changes(spark, 200), batch_id=1)
     )
     grower.start()
     assert entered.wait(120)
+    # the REST write merges through the stream's apply; traced from
+    # here on, so only the write's merge is recorded, not the grower's
+    real_apply = KeyedStateSink._apply_changes_locked
+
+    def traced_apply(self, *a, **kw):
+        order.append("merge_start")
+        return real_apply(self, *a, **kw)
+
+    monkeypatch.setattr(KeyedStateSink, "_apply_changes_locked", traced_apply)
     # resize is mid-flight and holding the lock: a REST upsert must block
     upsert_done = threading.Event()
 
